@@ -7,11 +7,13 @@ Two timing families per query (best-of-3, fresh lineage each run, after
 a JVM/codegen warmup): ``queries`` is end-to-end (build + optimize +
 execute — the round-1/2 metric), ``exec_queries`` times only the
 execution of the already-optimized plan — the part that scales with
-data. Every timed action is a checksum aggregate (bit_xor of xxhash64
-over every output column), so Catalyst cannot prune any output
-expression. ``calibration`` carries a no-op 32-task job time and a
-same-box DuckDB re-run of the headline oracle SQLs so cross-round
-numbers stay interpretable across VM re-provisioning.
+data. Session set-up and the gate protocol live in
+``ubdc_airbnb_spark.runner``: every timed action is its checksum
+aggregate (bit_xor of xxhash64 over every output column, plus the row
+count), so Catalyst cannot prune any output expression.
+``calibration`` carries a no-op 32-task job time and a same-box DuckDB
+re-run of the headline oracle SQLs so cross-round numbers stay
+interpretable across VM re-provisioning.
 """
 
 from __future__ import annotations
@@ -20,11 +22,14 @@ import json
 import os
 import sys
 import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from ubdc_airbnb_spark import queries as q_mod
-from ubdc_airbnb_spark.session import get_spark
+from ubdc_airbnb_spark.operators.prefixsum import release_pins
+from ubdc_airbnb_spark.runner import bench_session, plan_gate, run_gate
+from ubdc_airbnb_spark.sources.tables import TABLE_NAMES
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -84,13 +89,6 @@ DUP_SENSITIVE = [
 ]
 
 
-def _input_bytes(sf_dir: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(sf_dir):
-        total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-    return total
-
-
 def _dup20_dir(sf_dir: str) -> str:
     """Materialize the dup20 bench variant (r09, VERDICT item 6): same
     table sizes, but 20% of documents carry one of ten template texts —
@@ -107,7 +105,9 @@ def _dup20_dir(sf_dir: str) -> str:
     if os.path.exists(marker):
         return out
     os.makedirs(out, exist_ok=True)
-    for t in "region nation customer supplier part orders lineitem events embeddings".split():
+    for t in TABLE_NAMES:
+        if t == "documents":
+            continue
         dst = os.path.join(out, f"{t}.parquet")
         if not os.path.exists(dst):
             os.symlink(os.path.join(os.path.abspath(sf_dir), f"{t}.parquet"), dst)
@@ -156,68 +156,7 @@ def main() -> None:
     if variant == "dup20":
         sf_dir = _dup20_dir(sf_dir)
         headline = DUP_SENSITIVE
-    # shuffle partitions: bytes / ~128 MB target, floored at one per core
-    # — the production rule. At toy SF the floor (cores) wins; at 100 TB
-    # the bytes term yields tens of thousands of partitions.
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    # Partition sizing is BYTES-based (the production rule: ~128 MB of
-    # input per reduce partition, measured here with a ~4 MB toy-scale
-    # target so the rule still exercises multi-partition paths), capped
-    # at the core count. Per-task scheduling costs ~3 ms on this host
-    # (noop calibration), so a 34 MB sf0.1 input runs 8 partitions:
-    # r05 A/B measured 17 parts -> 8 parts as -0.8 s of pure scheduling
-    # floor across the 29-query set with identical results and every
-    # multi-partition path (shuffle, two-pass prefix sums, salting)
-    # still exercised. At 100 TB the same bytes rule yields tens of
-    # thousands of partitions and the cap never binds.
-    parts = int(
-        os.environ.get("SPARK_GRAFT_PARTS", 0)
-    ) or min(cpus, max(4, _input_bytes(sf_dir) // (4 << 20)))
-    # AQE is the right default at cluster scale (skew splits, runtime
-    # coalescing) and stays ON in session.py's production config; under
-    # the bench's per-query latency accounting it *costs* ~40 ms per
-    # query stage on this host (each adaptive stage materializes as its
-    # own job) while having nothing to adapt at toy SF with bytes-sized
-    # partitions — measured 8.1 s -> 7.4 s on the headline set. The
-    # bench therefore runs with AQE off; flip with SPARK_GRAFT_AQE=true.
-    spark = get_spark(
-        "bench",
-        shuffle_partitions=parts,
-        extra_conf={
-            "spark.sql.adaptive.enabled": os.environ.get("SPARK_GRAFT_AQE", "false"),
-            "spark.sql.adaptive.coalescePartitions.enabled": os.environ.get("SPARK_GRAFT_COALESCE", "false"),
-            # cache knobs exposed for sweeps; larger uncompressed batches
-            # won an isolated subset A/B (~18%) but not a full-set A/B on
-            # this noisy host, so the Spark defaults stay
-            "spark.sql.inMemoryColumnarStorage.batchSize": os.environ.get("SPARK_GRAFT_CACHE_BATCH", "10000"),
-            "spark.sql.inMemoryColumnarStorage.compressed": os.environ.get("SPARK_GRAFT_CACHE_COMPRESS", "true"),
-        },
-    )
-
-    # warmup: JVM + whole-stage-codegen compilation path, then prime the
-    # table cache (warm-cache benchmark: the driver's single-row-group
-    # parquet files force single-threaded cold scans; cached tables are
-    # repartitioned across cores, which is how production inputs arrive).
-    # SPARK_GRAFT_WARM_CACHE=false runs the SYMMETRIC disclosure variant:
-    # Spark reads the same parquet files DuckDB reads, per timed run, no
-    # cached tables — recorded once per round in BENCH_REPLAYS/ to bound
-    # the warm-cache flattery with a number (see BENCH_NOTES.md).
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    use_warm = os.environ.get("SPARK_GRAFT_WARM_CACHE", "true").lower() != "false"
-    if use_warm:
-        from ubdc_airbnb_spark.sources.tables import warm_cache
-
-        warm_cache(spark, sf_dir, partitions=parts)
-
-    from pyspark.sql import functions as F
-
-    def _checksum_frame(df):
-        # hashes every output column, so Catalyst cannot prune any
-        # projected expression out of the timed work
-        return df.agg(
-            F.bit_xor(F.xxhash64(F.struct(*[F.col(c) for c in df.columns])))
-        )
-
+    spark = bench_session("bench", sf_dir)
     specs = {s.name: s for s in q_mod.registry()}
 
     # plan-warming pass: build + analyze/optimize/physical-plan every
@@ -225,27 +164,22 @@ def main() -> None:
     # bridge run on the driver JVM's cold JIT for the first ~30 plans —
     # measured 2.3 s build + 0.9 s plan on the first full loop vs 1.5 s
     # + 0.46 s on the next within one session. A production driver is
-    # never JIT-cold; this is the same disclosure class as the existing
-    # JVM/codegen warmup above. Timed runs still build fresh frames and
-    # pay full analysis/optimization per run.
-    from ubdc_airbnb_spark.operators.prefixsum import release_pins as _rp
-
+    # never JIT-cold; this is the same disclosure class as the
+    # JVM/codegen warmup in bench_session. Timed runs still build fresh
+    # frames and pay full analysis/optimization per run.
     for name in headline:
-        fn = specs[name].spark
-        df = fn(spark, sf_dir)
-        cs = df.agg(F.bit_xor(F.xxhash64(F.struct(*[F.col(c) for c in df.columns]))))
-        cs._jdf.queryExecution().executedPlan()
-        _rp()
+        plan_gate(partial(specs[name].spark, spark, sf_dir))
+        release_pins()
 
     timings: dict[str, float] = {}
     exec_timings: dict[str, float] = {}
     total = 0.0
     exec_total = 0.0
     for name in headline:
-        fn = specs[name].spark
-        # Each of 3 runs builds a FRESH frame (fresh RDD lineage, so no
-        # cross-run shuffle-output reuse can flatter the numbers), then
-        # splits the wall time at the optimized-physical-plan boundary:
+        # Each of 3 runs builds a FRESH frame (fresh RDD lineage, and
+        # run_gate releases the run's pins, so no cross-run reuse can
+        # flatter the numbers), then splits the wall time at the
+        # optimized-physical-plan boundary:
         #   e2e  = build + analyze/optimize/plan + execute  (the round-1/2
         #          metric, kept for cross-round comparability; at toy SF
         #          it is dominated by CONSTANT driver work — py4j
@@ -258,27 +192,12 @@ def main() -> None:
         # Caveat: a query that eagerly materializes an internal
         # checkpoint during construction (ngram verify's gram table)
         # carries that work in e2e, not exec — e2e is the upper bound.
-        best = float("inf")
-        ebest = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            cs = _checksum_frame(fn(spark, sf_dir))
-            cs._jdf.queryExecution().executedPlan()  # force plan, no exec
-            t1 = time.perf_counter()
-            cs.collect()
-            t2 = time.perf_counter()
-            best = min(best, t2 - t0)
-            ebest = min(ebest, t2 - t1)
-        timings[name] = round(best, 3)
+        build = partial(specs[name].spark, spark, sf_dir)
+        runs = [run_gate(build) for _ in range(3)]
+        timings[name] = round(min(r["build_s"] + r["plan_s"] + r["exec_s"] for r in runs), 3)
         total += timings[name]
-        exec_timings[name] = round(ebest, 3)
+        exec_timings[name] = round(min(r["exec_s"] for r in runs), 3)
         exec_total += exec_timings[name]
-        # drop this query's operator pins before the next query starts:
-        # a 25-query session otherwise accumulates dead cache entries
-        # that compete with the warm table cache for storage memory
-        from ubdc_airbnb_spark.operators.prefixsum import release_pins
-
-        release_pins()
 
     print(
         json.dumps(
@@ -291,22 +210,13 @@ def main() -> None:
                 "exec_total": round(exec_total, 3),
                 "sf": sf,
                 "variant": variant,
-                # scaling-probe transparency (r12, VERDICT r11 item 2):
-                # the master IS local[$SPARK_GRAFT_CPUS] (session.py), but
-                # partitioning is BYTES-derived (~4 MB/partition toy rule,
-                # production ~128 MB) capped at the core count — at sf0.1
-                # the 34 MB input yields 8 partitions for ANY core count
-                # >= 8, so an 8-vs-32-core ratio ≈ 1 is the true behavior
-                # of an 8-way-parallel workload, not an ignored env var.
-                # Emitting the resolved values makes that self-explaining
-                # in the artifact. Flooring parts at the core count
-                # instead was measured and rejected: 32 partitions on a
-                # 34 MB input re-adds ~3 ms/task scheduling floor across
-                # 29 queries (the r05 A/B: 17->8 parts was -0.8 s) while
-                # exercising no new code path — a local[32]-only
-                # pessimization the 100 TB bytes rule never hits.
-                "cpus": cpus,
-                "shuffle_partitions": parts,
+                # scaling-probe transparency (r12, VERDICT r11 item 2): the
+                # master is local[cpus], but shuffle partitions follow the
+                # input bytes (runner.shuffle_partitions) and are capped at
+                # cpus, so a core-scaling comparison is only meaningful at
+                # an SF whose bytes rule reaches the larger core count.
+                "cpus": spark.sparkContext.defaultParallelism,
+                "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
                 # host calibration: the driver re-provisions the VM
                 # between rounds, so raw cross-round deltas carry
                 # scheduling-speed noise. noop_32_tasks_sec prices pure
@@ -340,9 +250,7 @@ def _duckdb_total_sec(sf_dir: str, specs, headline=HEADLINE) -> float:
     import duckdb
 
     con = duckdb.connect()
-    for name in (
-        "region nation customer supplier part orders lineitem events documents embeddings".split()
-    ):
+    for name in TABLE_NAMES:
         con.execute(
             f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{sf_dir}/{name}.parquet')"
         )

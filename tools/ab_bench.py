@@ -4,8 +4,9 @@ discipline for closing "is it box noise or a real regression?" questions
 
 Each round builds FRESH frames for every variant (fresh lineage — no
 cross-run shuffle reuse), interleaves A/B/A/B within the round, and
-times with the bench.py protocol: wall = build + plan + execute of the
-xxhash64-checksum collect; exec = execute only. Reports best-of-N and
+times with the bench.py protocol (``runner.run_gate``, which also
+releases each run's pins): wall = build + plan + execute of the
+checksum collect; exec = execute only. Reports best-of-N and
 the full series. One JSON line to stdout; pass --out to also write a
 replay artifact.
 
@@ -21,15 +22,13 @@ import argparse
 import json
 import os
 import sys
-import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-
-def _checksum(df):
-    return df.agg(F.bit_xor(F.xxhash64(F.struct(*[F.col(c) for c in df.columns]))))
+from ubdc_airbnb_spark.runner import run_gate  # noqa: E402
 
 
 # --- variant builders -------------------------------------------------
@@ -402,23 +401,20 @@ def main() -> None:
     docs = load_table(spark, args.sf, "documents")
     variants = AB_SUITES[args.suite]
 
+    builds = {name: partial(fn, spark, docs, args.sf) for name, fn in variants.items()}
+
     # warm: one full pass per variant (codegen, JIT, page cache)
-    for fn in variants.values():
-        _checksum(fn(spark, docs, args.sf)).collect()
+    for build in builds.values():
+        run_gate(build)
 
     series: dict[str, dict[str, list[float]]] = {
         k: {"wall": [], "exec": []} for k in variants
     }
     for _ in range(args.rounds):
-        for name, fn in variants.items():
-            t0 = time.perf_counter()
-            cs = _checksum(fn(spark, docs, args.sf))
-            cs._jdf.queryExecution().executedPlan()
-            t1 = time.perf_counter()
-            cs.collect()
-            t2 = time.perf_counter()
-            series[name]["wall"].append(round(t2 - t0, 3))
-            series[name]["exec"].append(round(t2 - t1, 3))
+        for name, build in builds.items():
+            r = run_gate(build)
+            series[name]["wall"].append(round(r["build_s"] + r["plan_s"] + r["exec_s"], 3))
+            series[name]["exec"].append(round(r["exec_s"], 3))
     out = {
         "suite": args.suite,
         "sf": args.sf,

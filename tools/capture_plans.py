@@ -19,32 +19,17 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import bench as bench_mod
 from ubdc_airbnb_spark import queries as q_mod
 from ubdc_airbnb_spark.operators.prefixsum import release_pins
-from ubdc_airbnb_spark.session import get_spark
+from ubdc_airbnb_spark.runner import bench_session
 
 
 def main() -> None:
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
     only = set(sys.argv[2:])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    parts = int(os.environ.get("SPARK_GRAFT_PARTS", 0)) or min(
-        cpus, max(4, bench_mod._input_bytes(sf_dir) // (4 << 20))
-    )
-    spark = get_spark(
-        "capture-plans",
-        shuffle_partitions=parts,
-        extra_conf={
-            "spark.sql.adaptive.enabled": "false",
-            "spark.sql.adaptive.coalescePartitions.enabled": "false",
-        },
-    )
-    # warm cache mirrors the bench default; SPARK_GRAFT_WARM_CACHE=false
-    # captures the parquet-scan plans instead (PushedFilters/ReadSchema
-    # visible at the FileScan node rather than an InMemoryRelation)
-    if os.environ.get("SPARK_GRAFT_WARM_CACHE", "true").lower() != "false":
-        from ubdc_airbnb_spark.sources.tables import warm_cache
-
-        warm_cache(spark, sf_dir, partitions=parts)
+    # SPARK_GRAFT_WARM_CACHE=false captures the parquet-scan plans
+    # instead (PushedFilters/ReadSchema visible at the FileScan node
+    # rather than an InMemoryRelation)
+    spark = bench_session("capture-plans", sf_dir)
 
     round_dir = os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r12")
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", round_dir)

@@ -40,12 +40,11 @@ def main() -> int:
     import __spark_entry__ as entry_mod
     from ubdc_airbnb_spark.operators.prefixsum import release_pins
     from ubdc_airbnb_spark.session import get_spark
+    from ubdc_airbnb_spark.sources.tables import TABLE_NAMES
 
     spark = get_spark("oracle-check")
     con = duckdb.connect()
-    for name in (
-        "region nation customer supplier part orders lineitem events documents embeddings".split()
-    ):
+    for name in TABLE_NAMES:
         con.execute(
             f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{sf_dir}/{name}.parquet')"
         )

@@ -27,8 +27,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
-
 #: one canonical driver heap per replication factor (sf1 = 10x sf0.1,
 #: sf10 = 100x): growth comparisons across rounds are only valid
 #: between artifacts whose headers carry the SAME heap (page-cache
@@ -161,9 +159,11 @@ SKEW_BENIGN = {
 def replicate(src_dir: str, out_dir: str, factor: int) -> None:
     import duckdb
 
+    from ubdc_airbnb_spark.sources.tables import TABLE_NAMES
+
     os.makedirs(out_dir, exist_ok=True)
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TABLE_NAMES:
         dst = os.path.join(out_dir, f"{t}.parquet")
         if os.path.exists(dst):
             continue

@@ -39,18 +39,6 @@ def sanitize_payload(col: Column | str) -> Column:
     return F.regexp_replace(_c(col), r"\\u0000", "")
 
 
-def encapsulate_non_json(text_col: Column | str, context: str = "non-json response") -> Column:
-    """X10: non-JSON body → ``{context_text, base64_str}`` JSON string
-    (ref managers.py:110-139)."""
-    c = _c(text_col)
-    return F.to_json(
-        F.struct(
-            F.lit(context).alias("context_text"),
-            F.base64(c.cast("binary")).alias("base64_str"),
-        )
-    )
-
-
 def strip_url_query(url: Column | str) -> Column:
     """X5: drop the query-string from a URL (ref managers.py:285 — picture
     URL ``split("?")[0]``)."""

@@ -114,10 +114,6 @@ def quadkey_to_tile_y(qk: Column | str) -> Column:
     )
 
 
-def quadkey_zoom(qk: Column | str) -> Column:
-    return F.length(_c(qk))
-
-
 def children(qk: Column | str) -> Column:
     """G5: the four child quadkeys (ref: mercantile.children,
     models.py:269-275) — ``qk || d for d in 0..3``."""
@@ -139,12 +135,6 @@ def ancestors(qk: Column | str) -> Column:
         F.sequence(F.lit(1), F.length(qk) - 1), lambda i: F.substring(qk, 1, i.cast("int"))
     )
     return F.when(F.length(qk) > 1, prefixes).otherwise(F.array().cast("array<string>"))
-
-
-def is_ancestor_of(qk_a: Column | str, qk_b: Column | str) -> Column:
-    """True when a is a proper prefix of b (ref: utils/grids.py:63-85)."""
-    a, b = _c(qk_a), _c(qk_b)
-    return b.startswith(a) & (F.length(b) > F.length(a))
 
 
 def lonlat_to_tile_x(lon: Column | str, z: Column | str | int) -> Column:

@@ -279,42 +279,6 @@ def _bound_argmax_lang_expr(counts_sql: str, langs: list[str]) -> str:
     return f"transform(array({counts_sql}), c -> CASE {whens} ELSE 'und' END)[0]"
 
 
-def lang_marker_counts(col: Column | str) -> Column:
-    """Per-language marker-stopword counts as one ``array<int>`` in
-    ``LANG_MARKERS`` order — the word array is built once (lambda-bound)
-    for all languages. Markers are lowercase; words are lowered inside
-    the membership test (same semantics as ``lang_marker_count``)."""
-    name = _fast_name(col)
-    ws = words_expr(f"`{name}`") if name is not None else None
-    if ws is None:
-        # Column path: same binding via the Column API
-        arr = F.array(words(col))
-        return F.transform(
-            arr,
-            lambda g: F.array(
-                *[
-                    F.size(
-                        F.filter(
-                            g,
-                            lambda w: F.array_contains(
-                                F.array(*[F.lit(m) for m in LANG_MARKERS[lang]]),
-                                F.lower(w),
-                            ),
-                        )
-                    )
-                    for lang in LANG_MARKERS
-                ]
-            ),
-        )[0]
-    counts = ",".join(
-        "size(filter(g, w -> (lower(w) IN ({lst}))))".format(
-            lst=",".join(_sql_str(m) for m in LANG_MARKERS[lang])
-        )
-        for lang in LANG_MARKERS
-    )
-    return F.expr(f"transform(array({ws}), g -> array({counts}))[0]")
-
-
 def lang_id(col: Column | str) -> Column:
     """Marker-based language ID: argmax over per-language marker counts.
     Ties break to the first language in ``LANG_MARKERS`` order (en, de,

@@ -1,4 +1,4 @@
-"""Time helpers (SURVEY §2.9 C1-C3; ref
+"""Time helpers (SURVEY §2.9 C1, C5; ref
 /root/reference/src/ubdc_airbnb/ubdc_airbnb/utils/time.py:6-15) as native
 expressions."""
 
@@ -21,17 +21,6 @@ def start_of_day(ts: Column | str | None = None) -> Column:
 def end_of_day(ts: Column | str | None = None) -> Column:
     """C1: 23:59:59.999999 of the given timestamp's day."""
     return start_of_day(ts) + F.expr("INTERVAL 1 DAY") - F.expr("INTERVAL 1 MICROSECOND")
-
-
-def seconds_from(ts: Column | str, seconds: int) -> Column:
-    """C2: timestamp + n seconds (task-expiry stamps, default 23 h in the
-    reference — ref utils/time.py:9-11)."""
-    return _c(ts) + F.make_interval(secs=F.lit(seconds))
-
-
-def hours_before(ts: Column | str, hours: int) -> Column:
-    """C3: timestamp - n hours (staleness thresholds)."""
-    return _c(ts) - F.make_interval(hours=F.lit(hours))
 
 
 def elapsed_seconds(start: Column | str, end: Column | str) -> Column:

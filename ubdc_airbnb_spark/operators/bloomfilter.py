@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import md5_long, md5_long_sql
+from ..functions.hashing import md5_long
 
 
 def _positions(key: Column, n_hashes: int, m_bits: int) -> list[Column]:
@@ -109,13 +109,3 @@ def bloom_prune_semi_join(
         fact_key,
         "left_semi",
     )
-
-
-def bloom_positions_sql(expr: str, n_hashes: int = 4, m_bits: int = 8192) -> str:
-    """DuckDB oracle fragment: a VALUES-free generator of the k bit
-    positions for ``expr`` (UNION ALL of the salted hashes)."""
-    parts = [
-        f"SELECT {md5_long_sql(expr, salt=f'bf{i}')} % {m_bits} AS p"
-        for i in range(n_hashes)
-    ]
-    return " UNION ALL ".join(parts)

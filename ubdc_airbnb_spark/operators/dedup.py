@@ -361,19 +361,6 @@ def _digest_groups(
     )
 
 
-def _self_pairs(g: DataFrame) -> DataFrame:
-    """(vid, vid) value pairs for multi-member groups — within-group
-    member pairs are expanded through the SAME pipeline as cross-group
-    pairs (``_expand_pairs``), so the within branch reuses the
-    (min, collect_list) aggregate instead of forcing a third pruned
-    variant (column pruning specializes otherwise-identical aggregates
-    per branch, defeating exchange reuse — the r08 A/B measured the
-    naively-branched plan at 5 scans of the corpus)."""
-    return g.filter(F.size("__mids") > 1).select(
-        F.col("__vid").alias("vid_a"), F.col("__vid").alias("vid_b")
-    )
-
-
 def _contracted_band_join(
     g: DataFrame,
     num_perm: int,
@@ -745,16 +732,6 @@ def lsh_jaccard_pairs(
     )
 
 
-def minhash_jaccard(sigs_a: str = "sig_a", sigs_b: str = "sig_b") -> F.Column:
-    """Estimated Jaccard from two signature arrays: fraction of agreeing
-    positions."""
-    return (
-        F.size(F.filter(F.zip_with(F.col(sigs_a), F.col(sigs_b), lambda x, y: x == y), lambda v: v))
-        .cast("double")
-        / F.size(F.col(sigs_a)).cast("double")
-    )
-
-
 def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> DataFrame:
     """SimHash sketch: each distinct word votes ±1 on every bit of its
     60-bit hash; sketch bit b is 1 iff the vote sum is positive.
@@ -991,17 +968,6 @@ def simhash_hamming_pairs(
         )
     )
     return zero.unionByName(near)
-
-
-def hamming_distance(a: str = "simhash_a", b: str = "simhash_b", bits: int = 32) -> F.Column:
-    """Popcount of XOR via bit explosion (no UDF)."""
-    x = F.col(a).bitwiseXOR(F.col(b))
-    return F.aggregate(
-        F.sequence(F.lit(0), F.lit(bits - 1)),
-        F.lit(0),
-        lambda acc, i: acc
-        + F.call_function("shiftright", x, i.cast("int")).bitwiseAND(F.lit(1)).cast("int"),
-    )
 
 
 def ngram_jaccard_pairs(

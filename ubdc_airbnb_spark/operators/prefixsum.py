@@ -143,8 +143,9 @@ def unpin(df: DataFrame) -> bool:
 def release_pins() -> int:
     """Unpersist every live ``_pin`` handle (non-blocking) and clear the
     registry; returns how many were released. Call after the terminal
-    action of a query — the gate runner, bench harness, and report CLI
-    all do, so a multi-query session holds at most one query's pins."""
+    action of a query. On the gate path ``runner.run_gate`` does, even
+    when the build raises; the oracle checker and report CLI do too, so
+    a multi-query session holds at most one query's pins."""
     n = 0
     for df in _PINNED.values():
         try:

@@ -68,45 +68,6 @@ def select_due_calendars(
     )
 
 
-def select_due_reviews(
-    listings: DataFrame,
-    aoi_covers: DataFrame,
-    inflight: DataFrame | None = None,
-    how_many: int = 50,
-    age_hours: int = 3 * 7 * 24,
-) -> DataFrame:
-    """Review refresh planner (ref operations/reviews.py:79-139: 21-day
-    staleness, batch 50, 24h in-flight dedup)."""
-    return select_due(
-        listings,
-        aoi_covers,
-        inflight,
-        flag_col="collect_reviews",
-        freshness_col="reviews_updated_at",
-        threshold_expr=f"current_timestamp() - INTERVAL {age_hours} HOUR",
-        how_many=how_many,
-    )
-
-
-def select_due_bookings(
-    listings: DataFrame,
-    aoi_covers: DataFrame,
-    inflight: DataFrame | None = None,
-    how_many: int = 500,
-    age_hours: int = 23,
-) -> DataFrame:
-    """Booking-quote planner (ref operations/bookings.py:41-70)."""
-    return select_due(
-        listings,
-        aoi_covers,
-        inflight,
-        flag_col="collect_bookings",
-        freshness_col="booking_quote_updated_at",
-        threshold_expr=f"current_timestamp() - INTERVAL {age_hours} HOUR",
-        how_many=how_many,
-    )
-
-
 def review_page_offsets(counts: DataFrame, page_size: int = 100) -> DataFrame:
     """X12/T8 improvement: the reference fans out review pages
     sequentially from page 1's metadata (ref tasks.py:55-72); the data
