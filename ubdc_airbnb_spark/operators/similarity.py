@@ -186,18 +186,15 @@ def cosine_expr(a_sql: str, b_sql: str) -> str:
 #: sensitivity at gate scale as a side effect.
 VECTORIZED_MIN_ROWS = 10_000
 
-#: parquet path -> footer num_rows (footers are immutable per path;
-#: index compaction writes NEW generation paths, never rewrites)
-_FOOTER_ROWS_CACHE: dict = {}
-
 
 def _footer_rows(df: DataFrame):
     """Source-cardinality estimate from parquet footers — metadata only,
-    no Spark job. ``inputFiles()`` walks the LOGICAL plan, so this works
-    on derived and warm-cached frames alike (the cache substitution
-    happens at physical planning). Returns None when any input is not a
-    local parquet file — callers then assume BIG and keep the
-    vectorized kernel, the safe direction at scale."""
+    read on every call (milliseconds), no Spark job. ``inputFiles()``
+    walks the LOGICAL plan, so this works on derived and warm-cached
+    frames alike (the cache substitution happens at physical planning).
+    Returns None when any input is not a local parquet file — callers
+    then assume BIG and keep the vectorized kernel, the safe direction
+    at scale."""
     try:
         files = df.inputFiles()
     except Exception:
@@ -210,19 +207,14 @@ def _footer_rows(df: DataFrame):
 
     total = 0
     for uri in files:
-        if uri in _FOOTER_ROWS_CACHE:
-            total += _FOOTER_ROWS_CACHE[uri]
-            continue
         parsed = urlparse(uri)
         if parsed.scheme not in ("file", ""):
             return None
         path = unquote(parsed.path)
         try:
-            rows = pq.ParquetFile(path).metadata.num_rows
+            total += pq.ParquetFile(path).metadata.num_rows
         except Exception:
             return None
-        _FOOTER_ROWS_CACHE[uri] = rows
-        total += rows
     return total
 
 

@@ -5,6 +5,12 @@ logical plans scale to a multi-executor cluster: AQE for runtime re-planning
 (skew joins, partition coalescing), UTC session time, Arrow for any
 pandas-UDF path, and shuffle partitions sized to the parallelism at hand
 rather than the 200 default.
+
+Session conf is decided in this module alone, never as a side effect of
+building a query, so one query's settings cannot leak into the next.
+That includes the timestamp policy: UTC session time, and
+``spark.sql.legacy.parquet.nanosAsLong`` so parquet TIMESTAMP(NANOS)
+columns read as int64 (``sources.tables.load_table`` truncates them).
 """
 
 from __future__ import annotations
@@ -12,6 +18,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_TIMESTAMP_POLICY = (
+    ("spark.sql.session.timeZone", "UTC"),
+    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+)
 
 
 def get_spark(
@@ -31,7 +42,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=dict(_TIMESTAMP_POLICY))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
@@ -76,3 +87,12 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def ensure_timestamp_policy(spark: SparkSession) -> None:
+    """For a session not built by ``get_spark`` (``__spark_entry__`` is
+    handed one): without the policy, TIMESTAMP(NANOS) reads fail and
+    timestamps shift by the zone's offset. A no-op on ``get_spark``'s."""
+    for key, value in _TIMESTAMP_POLICY:
+        if spark.conf.get(key) != value:
+            spark.conf.set(key, value)

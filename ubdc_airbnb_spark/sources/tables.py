@@ -15,6 +15,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import ensure_timestamp_policy
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -35,15 +37,14 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 _CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
-def warm_cache(spark: SparkSession, sf_dir: str, partitions: int | None = None) -> None:
+def warm_cache(spark: SparkSession, sf_dir: str, partitions: int) -> None:
     """Materialize every table in executor memory, repartitioned across
     cores. The driver-generated parquet files are single-row-group, so a
     cold scan is single-threaded no matter what ``maxPartitionBytes``
     says; production tables would be written with many row groups /
     files. Benchmarks run warm-cache (disclosed in bench.py)."""
-    n = partitions or int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     for name in TABLE_NAMES:
-        df = load_table(spark, sf_dir, name, use_cache=False).repartition(n).cache()
+        df = load_table(spark, sf_dir, name, use_cache=False).repartition(partitions).cache()
         df.count()
         _CACHE[(sf_dir, name)] = df
 
@@ -68,6 +69,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, use_cache: bool = Tr
     """
     if use_cache and (sf_dir, name) in _CACHE:
         return _CACHE[(sf_dir, name)]
+    ensure_timestamp_policy(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
         ns_cols = [
@@ -75,29 +77,25 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, use_cache: bool = Tr
         ]
     except Exception:
         ns_cols = []
-    if not ns_cols:
-        return _ntz_to_ltz(spark, spark.read.parquet(path))
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # timestamp_micros() produces a session-tz TIMESTAMP from epoch micros;
-    # downstream date_trunc/unix_timestamp must agree with DuckDB's naive-
-    # UTC view of the same data, so pin the session to UTC (idempotent).
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     df = spark.read.parquet(path)
+    if not ns_cols:
+        return _ntz_to_ltz(df)
+    # timestamp_micros() produces a session-tz TIMESTAMP from epoch micros;
+    # the policy's UTC zone makes it agree with DuckDB's naive-UTC view.
     for c in ns_cols:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df
 
 
-def _ntz_to_ltz(spark: SparkSession, df: DataFrame) -> DataFrame:
+def _ntz_to_ltz(df: DataFrame) -> DataFrame:
     """Parquet µs timestamps with isAdjustedToUTC=false arrive as
     TIMESTAMP_NTZ, which half the timestamp builtins (unix_micros,
-    window, ...) reject. With the session pinned to UTC the NTZ→LTZ cast
+    window, ...) reject. In the policy's UTC session time the NTZ→LTZ cast
     is value-identical to DuckDB's naive reading, so normalize every
     NTZ column to the session-tz TIMESTAMP type once at the scan."""
     ntz = [f.name for f in df.schema.fields if f.dataType.typeName() == "timestamp_ntz"]
     if not ntz:
         return df
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     for c in ntz:
         df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df

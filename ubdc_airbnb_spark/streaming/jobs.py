@@ -501,26 +501,22 @@ def foreach_batch_bm25_append(
             post = terms.withColumn(
                 "dl", F.sum("tf").over(Window.partitionBy(id_col))
             )
-            mode_key = "spark.sql.sources.partitionOverwriteMode"
-            old_mode = spark.conf.get(mode_key, "static")
-            spark.conf.set(mode_key, "dynamic")
-            try:
-                (
-                    post.withColumn("term_bucket", term_bucket(F.col("term"), nb))
-                    .withColumn("__batch", F.lit(batch_id).cast("long"))
-                    .repartition("term_bucket")
-                    .write.mode("overwrite")
-                    .partitionBy("term_bucket", "__batch")
-                    .parquet(current_path(os.path.join(index_path, "postings")))
-                )
-                (
-                    dl.withColumn("__batch", F.lit(batch_id).cast("long"))
-                    .write.mode("overwrite")
-                    .partitionBy("__batch")
-                    .parquet(current_path(os.path.join(index_path, "doclen")))
-                )
-            finally:
-                spark.conf.set(mode_key, old_mode)
+            (
+                post.withColumn("term_bucket", term_bucket(F.col("term"), nb))
+                .withColumn("__batch", F.lit(batch_id).cast("long"))
+                .repartition("term_bucket")
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("term_bucket", "__batch")
+                .parquet(current_path(os.path.join(index_path, "postings")))
+            )
+            (
+                dl.withColumn("__batch", F.lit(batch_id).cast("long"))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("__batch")
+                .parquet(current_path(os.path.join(index_path, "doclen")))
+            )
             tot = dl.agg(
                 F.sum("dl").cast("long").alias("toktot"),
                 F.count(F.lit(1)).alias("n_docs"),
@@ -619,19 +615,14 @@ def foreach_batch_ivf_append(
             return  # completed batch redelivered: skip
         cents = spark.read.parquet(current_path(os.path.join(index_path, "centroids")))
         assigned = assign_ivf_buckets(batch_df, cents, id_col, vec_col)
-        mode_key = "spark.sql.sources.partitionOverwriteMode"
-        old_mode = spark.conf.get(mode_key, "static")
-        spark.conf.set(mode_key, "dynamic")
-        try:
-            (
-                assigned.withColumn("__batch", F.lit(batch_id).cast("long"))
-                .repartition("centroid_id")
-                .write.mode("overwrite")
-                .partitionBy("centroid_id", "__batch")
-                .parquet(current_path(os.path.join(index_path, "assignments")))
-            )
-        finally:
-            spark.conf.set(mode_key, old_mode)
+        (
+            assigned.withColumn("__batch", F.lit(batch_id).cast("long"))
+            .repartition("centroid_id")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("centroid_id", "__batch")
+            .parquet(current_path(os.path.join(index_path, "assignments")))
+        )
         n_new = batch_df.count()
         replace_parquet(
             spark.createDataFrame(
@@ -707,20 +698,15 @@ def foreach_batch_lsh_append(
             batch_df, id_col, text_col, p.num_perm, p.ngram, p.shingle
         )
         banded = banded_signatures(sigs, id_col, p.num_perm, p.bands)
-        mode_key = "spark.sql.sources.partitionOverwriteMode"
-        old_mode = spark.conf.get(mode_key, "static")
-        spark.conf.set(mode_key, "dynamic")
-        try:
-            (
-                banded.withColumn("key_bucket", _key_bucket(p.n_buckets))
-                .withColumn("__batch", F.lit(batch_id).cast("long"))
-                .repartition("key_bucket")
-                .write.mode("overwrite")
-                .partitionBy("key_bucket", "__batch")
-                .parquet(current_path(os.path.join(index_path, "banded")))
-            )
-        finally:
-            spark.conf.set(mode_key, old_mode)
+        (
+            banded.withColumn("key_bucket", _key_bucket(p.n_buckets))
+            .withColumn("__batch", F.lit(batch_id).cast("long"))
+            .repartition("key_bucket")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("key_bucket", "__batch")
+            .parquet(current_path(os.path.join(index_path, "banded")))
+        )
         replace_parquet(
             spark.createDataFrame(
                 [(p.num_perm, p.bands, p.ngram, p.shingle, p.n_buckets, batch_id)],
